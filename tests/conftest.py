@@ -60,6 +60,7 @@ _FAST_LANE_MODULES = {
     "test_codec_seam.py",
     "test_aqe.py",
     "test_pixel_ops.py",
+    "test_pixel_signing.py",    # content_signature / roundtrip_contract
     "test_properties.py",       # pure-kernel hypothesis sweeps
     "test_jpeg_codec.py",       # pure-numpy baseline JPEG codec
 }

@@ -13,7 +13,6 @@ from uav_streamprocessor_spark.operators.pixel import (
     decode_image,
     encode_image,
     letterbox_array,
-    letterbox_udf,
     make_test_image,
 )
 from uav_streamprocessor_spark.plans.pipeline import (
@@ -110,13 +109,6 @@ def test_best_resize_presence_gated():
         assert out_cv.shape == out_nn.shape
 
 
-def test_letterbox_udf_batches(spark, frames_df):
-    out = frames_df.limit(8).withColumn("lb", letterbox_udf("image")).collect()
-    for r in out:
-        img = decode_image(bytes(r["lb"]))
-        assert img.shape == (640, 640, 3)
-
-
 def test_stub_detector_deterministic():
     det = StubDetector(0.4, ("car", "person"))
     img = decode_image(make_test_image(5, 64, 48))
@@ -148,11 +140,36 @@ def test_sender_payloads_shape(spark, frames_df):
     import json
 
     for r in rows:
+        # the fused operator's output image is the letterboxed frame
+        assert decode_image(r["frame_jpeg"]).shape == (640, 640, 3)
         meta = json.loads(r["metadata"])
         assert meta["frame_number"] == r["frame_number"]
         for d in meta["detections"]:
             assert set(d) == {"class_name", "class_id", "confidence", "box"}
             assert len(d["box"]) == 4
+
+
+def test_failed_frame_passes_through_but_probes_raise(spark):
+    """One corrupt image: the fused operator passes it through with no
+    detections (frame_processing.py:53-57, :113-115) and keeps going,
+    while the content_signature probe over the same rows fails loudly."""
+    from pyspark.errors import PythonException
+
+    from uav_streamprocessor_spark.operators.pixel import (
+        content_signature,
+        letterbox_and_detect,
+    )
+
+    bad = b"\x00" * 5
+    df = spark.createDataFrame(
+        [("cam0", 0, make_test_image(1, 36, 64)), ("cam0", 30, bad)],
+        "camera_id string, frame_number long, image binary",
+    )
+    rows = {r["frame_number"]: r for r in letterbox_and_detect(df).collect()}
+    assert decode_image(rows[0]["image"]).shape == (640, 640, 3)
+    assert bytes(rows[30]["image"]) == bad and rows[30]["detections"] == []
+    with pytest.raises(PythonException):
+        content_signature(df).collect()
 
 
 def test_recorder_rows_fps_fallback(spark, frames_df):

@@ -115,23 +115,27 @@ def test_jpeg_encode_decode_golden_digests():
     )
 
 
-def test_mjpeg_keyframe_pushdown_list_ties_to_fixture():
-    """The keyframe IN-list pushed into the uav_video source derives
-    from the SAME constants the fixture builder uses (ADVICE r17: the
-    literal [0, 30] would silently drop keyframes >= 60 if the fixture
-    ever grew). Breaking the tie — changing n_frames or the interval
-    without the other — changes this list and fails here."""
-    from uav_streamprocessor_spark import registry
-    from uav_streamprocessor_spark.config import DEFAULT_CONFIG
+@pytest.mark.parametrize("n_frames", [60, 31, 121])
+def test_keyframe_scan_plans_one_partition_per_keyframe(spark, n_frames):
+    """keyframe_scan derives its pushdown IN list from the sources' own
+    frame counts (the 60-, 31- and 121-frame shapes of the registry
+    pixel fixtures), so it plans exactly range(0, n, interval) per
+    camera — every keyframe, one partition each, nothing else decoded."""
+    from pyspark.sql import functions as F
 
-    n_frames = registry._MJPEG_FIXTURE_GEOMETRY[1]
-    interval = DEFAULT_CONFIG.keyframe_interval
-    got = registry._mjpeg_keyframe_numbers()
-    assert got == [
-        f for f in range(n_frames) if f % interval == 0
-    ]
-    # today's fixture: 60 frames, interval 30 → exactly the r17 literal
-    assert got == [0, 30]
+    from uav_streamprocessor_spark.config import DEFAULT_CONFIG
+    from uav_streamprocessor_spark.sources.video_source import keyframe_scan
+
+    specs = [f"synthetic://kf{i}?frames={n_frames}&w=8&h=4" for i in range(2)]
+    scan = keyframe_scan(spark, specs)
+    want = list(range(0, n_frames, DEFAULT_CONFIG.keyframe_interval))
+    assert scan.rdd.getNumPartitions() == 2 * len(want)
+    rows = scan.select(
+        "camera_id", "frame_number", F.spark_partition_id().alias("pid")
+    ).collect()
+    for cam in ("kf0", "kf1"):
+        assert sorted(r["frame_number"] for r in rows if r["camera_id"] == cam) == want
+    assert len({r["pid"] for r in rows}) == len(rows)
 
 
 def test_jpeg_decoder_error_contract_held():

@@ -10,10 +10,11 @@ The reference letterbox (uav/frame_processing.py:15-57) computes:
     pad_right  = target_w - new_w - pad_left       # :39
 
 Here the same math runs as Catalyst expressions (whole-stage codegen'd,
-oracle-checkable); the pixel transform itself lives in
-operators/letterbox.py as a pandas UDF. `floor` replaces `int()` —
-identical for the positive values involved, and it keeps Spark and DuckDB
-casts in agreement (DuckDB CAST(double AS INT) rounds; Spark truncates).
+oracle-checkable); the pixel transform itself is
+operators/pixel.letterbox_array, run inside the fused
+letterbox_and_detect. `floor` replaces `int()` — identical for the
+positive values involved, and it keeps Spark and DuckDB casts in
+agreement (DuckDB CAST(double AS INT) rounds; Spark truncates).
 """
 
 from __future__ import annotations

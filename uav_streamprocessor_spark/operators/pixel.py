@@ -14,8 +14,9 @@ shapes, UDF signatures, per-executor model lifecycle) is real and tested;
 The detector is the deterministic hash-based stub promised in SURVEY.md
 §2 (T2): box geometry/confidence derive from a seed of the pixel checksum,
 so results are reproducible and oracle-checkable via the detections table;
-a YOLO model is a drop-in replacement for `_detect_batch` (same
-per-executor load-once pattern, reference uav/frame_processing.py:70-76).
+a YOLO model is a drop-in replacement for `StubDetector` inside
+`_map_keyframes` (same per-executor load-once pattern, reference
+uav/frame_processing.py:70-76).
 """
 
 from __future__ import annotations
@@ -96,6 +97,21 @@ def _best_resize():
         return None
 
 
+def _letterbox_slot(h: int, w: int, target: int) -> tuple:
+    """Reference letterbox geometry (uav/frame_processing.py:29-39):
+    (scale, new_w, new_h, rows, cols), where rows/cols are the slices of
+    the target×target frame the resized content occupies; the rest is
+    symmetric zero padding."""
+    scale = min(target / w, target / h)
+    # clamp to >=1 px (ADVICE r11): an extreme aspect ratio can floor one
+    # side to 0, which cv2.resize raises on (tripping the UDF's raw-buffer
+    # fallback) while the nearest path returned a valid all-padding frame
+    # — the clamp makes both kernels agree on degenerate inputs
+    new_w, new_h = max(1, int(w * scale)), max(1, int(h * scale))
+    top, left = (target - new_h) // 2, (target - new_w) // 2
+    return scale, new_w, new_h, slice(top, top + new_h), slice(left, left + new_w)
+
+
 def letterbox_array(img: np.ndarray, target: int = 640, resize=None) -> np.ndarray:
     """Reference letterbox semantics (uav/frame_processing.py:29-44):
     aspect-preserving resize + symmetric zero padding. `resize` is the
@@ -105,41 +121,16 @@ def letterbox_array(img: np.ndarray, target: int = 640, resize=None) -> np.ndarr
     free. The GEOMETRY (scale, content slot, padding) is identical
     either way — only interpolated pixel values differ."""
     h, w = img.shape[:2]
-    scale = min(target / w, target / h)
-    # clamp to >=1 px (ADVICE r11): an extreme aspect ratio can floor one
-    # side to 0, which cv2.resize raises on (tripping the UDF's raw-buffer
-    # fallback) while the nearest path returned a valid all-padding frame
-    # — the clamp makes both kernels agree on degenerate inputs
-    new_w, new_h = max(1, int(w * scale)), max(1, int(h * scale))
+    scale, new_w, new_h, rows, cols = _letterbox_slot(h, w, target)
     if resize is not None:
         resized = resize(img, (new_w, new_h))
     else:
         ys = (np.arange(new_h) / scale).astype(np.int64).clip(0, h - 1)
         xs = (np.arange(new_w) / scale).astype(np.int64).clip(0, w - 1)
         resized = img[ys][:, xs]
-    pad_top = (target - new_h) // 2
-    pad_left = (target - new_w) // 2
     out = np.zeros((target, target, 3), dtype=np.uint8)
-    out[pad_top : pad_top + new_h, pad_left : pad_left + new_w] = resized
+    out[rows, cols] = resized
     return out
-
-
-@pandas_udf(T.BinaryType())
-def letterbox_udf(images: pd.Series) -> pd.Series:
-    """T1 as an Arrow-batched scalar pandas UDF. Uses cv2 INTER_AREA when
-    the worker has a cv2 build (reference parity), nearest otherwise. On
-    error returns the input unchanged — the reference's fallback
-    (frame_processing.py:53-57)."""
-    rz = _best_resize()
-    out = []
-    for buf in images:
-        try:
-            out.append(
-                encode_image(letterbox_array(decode_image(bytes(buf)), resize=rz))
-            )
-        except Exception:
-            out.append(buf)
-    return pd.Series(out)
 
 
 # 5×7 bitmap font (classic HD44780 shapes): 7 rows per glyph, each row a
@@ -290,49 +281,58 @@ class StubDetector:
         return boxes
 
 
-def detect_objects(
+def _map_keyframes(
     frames: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
+    cfg: PipelineConfig,
+    schema,
+    per_row,
     image_col: str = "image",
-    decode=None,
+    decode=decode_image,
+    fallback=None,
 ) -> DataFrame:
-    """T2 via mapInPandas (iterator form): the detector loads ONCE per
-    executor Python worker and streams Arrow batches through — the engine's
-    version of the reference's load-once-at-init (frame_processing.py:70-76).
-    Adds `detections array<struct>`; explode downstream for the flat table.
+    """The T1/T2 kernel as ONE mapInPandas loop: per image, decode →
+    letterbox_array → StubDetector.detect, then `per_row(row, img, boxed,
+    dets)` turns the row (a column-name dict) into its output tuple, in
+    `schema` order. The detector and resize kernel load ONCE per executor
+    Python worker — the engine's version of the reference's
+    load-once-at-init (frame_processing.py:70-76) — and Arrow batches
+    stream through.
 
-    `decode` is the codec seam: any bytes→HxWx3-uint8 callable (e.g. a
-    cv2.imdecode wrapper) drops in; defaults to the raw-tensor codec.
-    Passed functions pickle by value to executors, so the swap needs no
-    module-path gymnastics."""
-    out_schema = T.StructType(
-        frames.schema.fields
-        + [T.StructField("detections", T.ArrayType(BBOX_STRUCT), False)]
-    )
+    A failing row yields `fallback(row)` when one is given and raises
+    otherwise, so the correctness probes never swallow an error."""
     conf, classes = cfg.confidence, cfg.classes
-    dec = decode or decode_image
+    target = cfg.target_resolution
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = StubDetector(conf, classes)  # one load per worker
+        detector = StubDetector(conf, classes)
+        rz = _best_resize()  # INTER_AREA where cv2 ships (ref parity)
         for pdf in batches:
-            dets = []
-            for buf in pdf[image_col]:
+            out = []
+            for row in pdf.to_dict("records"):
                 try:
-                    dets.append(detector.detect(dec(bytes(buf))))
+                    img = decode(bytes(row[image_col]))
+                    boxed = letterbox_array(img, target, resize=rz)
+                    out.append(per_row(row, img, boxed, detector.detect(boxed)))
                 except Exception:
-                    dets.append([])  # skip-and-continue (frame_processing.py:113-115)
-            pdf = pdf.copy()
-            pdf["detections"] = [
-                [
-                    (b["x_min"], b["y_min"], b["x_max"], b["y_max"],
-                     b["confidence"], b["class_id"], b["class_name"])
-                    for b in row
-                ]
-                for row in dets
-            ]
-            yield pdf
+                    if fallback is None:
+                        raise
+                    out.append(fallback(row))
+            # unlabelled columns: mapInPandas assigns them by position
+            yield pd.DataFrame(out)
 
-    return frames.mapInPandas(run, schema=out_schema)
+    return frames.mapInPandas(run, schema=schema)
+
+
+def _in_frame_order(out: DataFrame) -> DataFrame:
+    """Total (camera_id, frame_number) order for the keyframe-count-sized
+    probe outputs. repartition(1) + sortWithinPartitions, NOT orderBy: a
+    global sort plans a range-sampling job that would re-run the decode
+    scan, while one exchange of tiny rows is cheap. Streaming plans
+    forbid sorting — the micro-batch consumer orders at the sink (the S3
+    twin test sorts collected rows)."""
+    if out.isStreaming:
+        return out
+    return out.repartition(1).sortWithinPartitions("camera_id", "frame_number")
 
 
 def explode_detections(detected: DataFrame) -> DataFrame:
@@ -352,11 +352,11 @@ def letterbox_and_detect(
     codec=None,
 ) -> DataFrame:
     """Fused T1+T2: decode → letterbox → detect → encode in ONE
-    mapInPandas pass. The separate operators pay decode+encode twice and
-    ship the intermediate 640×640 buffer across two UDF boundaries; fused,
-    each image crosses the Arrow boundary once — the pixel path's dominant
-    cost at scale. Both unfused operators remain available for pipelines
-    that need the intermediate.
+    mapInPandas pass, so each image crosses the Arrow boundary once — the
+    pixel path's dominant cost at scale. Replaces `image_col` with the
+    letterboxed frame and adds `detections array<struct>`; explode
+    downstream for the flat table. A frame that fails passes through
+    unchanged with no detections (frame_processing.py:53-57, :113-115).
 
     `codec` is an (encode, decode) pair — the swap seam for real image
     codecs (cv2.imencode/imdecode at JPEG quality 90, the reference's
@@ -365,36 +365,20 @@ def letterbox_and_detect(
         frames.schema.fields
         + [T.StructField("detections", T.ArrayType(BBOX_STRUCT), False)]
     )
-    conf, classes = cfg.confidence, cfg.classes
-    target = cfg.target_resolution
     enc, dec = codec or (encode_image, decode_image)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = StubDetector(conf, classes)
-        rz = _best_resize()  # INTER_AREA where cv2 ships (ref parity)
-        for pdf in batches:
-            images, dets = [], []
-            for buf in pdf[image_col]:
-                try:
-                    boxed = letterbox_array(dec(bytes(buf)), target, resize=rz)
-                    images.append(enc(boxed))
-                    dets.append(detector.detect(boxed))
-                except Exception:
-                    images.append(buf)  # frame_processing.py:53-57 fallback
-                    dets.append([])     # frame_processing.py:113-115 fallback
-            pdf = pdf.copy()
-            pdf[image_col] = images
-            pdf["detections"] = [
-                [
-                    (b["x_min"], b["y_min"], b["x_max"], b["y_max"],
-                     b["confidence"], b["class_id"], b["class_name"])
-                    for b in row
-                ]
-                for row in dets
-            ]
-            yield pdf
+    def per_row(row, img, boxed, dets):
+        boxes = [
+            (b["x_min"], b["y_min"], b["x_max"], b["y_max"],
+             b["confidence"], b["class_id"], b["class_name"])
+            for b in dets
+        ]
+        return (*{**row, image_col: enc(boxed)}.values(), boxes)
 
-    return frames.mapInPandas(run, schema=out_schema)
+    return _map_keyframes(
+        frames, cfg, out_schema, per_row, image_col, decode=dec,
+        fallback=lambda row: (*row.values(), []),
+    )
 
 
 _SIGNATURE_DDL = (
@@ -423,59 +407,24 @@ def content_signature(
     the same integer box derivation (frame_processing.py:60-115 contract,
     StubDetector above). Only the signature rows leave the worker —
     payload bytes never cross the Arrow boundary outward."""
-    conf, classes = cfg.confidence, cfg.classes
-    target = cfg.target_resolution
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = StubDetector(conf, classes)
-        rz = _best_resize()
-        for pdf in batches:
-            rows = []
-            for cam, fno, buf in zip(
-                pdf["camera_id"], pdf["frame_number"], pdf[image_col]
-            ):
-                boxed = letterbox_array(
-                    decode_image(bytes(buf)), target, resize=rz
-                )
-                flat = boxed.astype(np.int64)
-                dets = detector.detect(boxed)
-                rows.append(
-                    (
-                        cam,
-                        int(fno),
-                        int(boxed.shape[0]),
-                        int(boxed.shape[1]),
-                        int(flat.sum()),
-                        int((flat * flat).sum()),
-                        len(dets),
-                        sum(
-                            b["x_min"] + b["y_min"] + b["x_max"] + b["y_max"]
-                            for b in dets
-                        ),
-                        sum(int(round(b["confidence"] * 1000)) for b in dets),
-                        sum(b["class_id"] for b in dets),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "camera_id", "frame_number", "height", "width",
-                    "payload_sum", "payload_ss", "n_dets",
-                    "box_coord_sum", "conf_milli_sum", "class_id_sum",
-                ],
-            )
+    def per_row(row, img, boxed, dets):
+        flat = boxed.astype(np.int64)
+        return (
+            row["camera_id"],
+            int(row["frame_number"]),
+            int(boxed.shape[0]),
+            int(boxed.shape[1]),
+            int(flat.sum()),
+            int((flat * flat).sum()),
+            len(dets),
+            sum(b["x_min"] + b["y_min"] + b["x_max"] + b["y_max"] for b in dets),
+            sum(int(round(b["confidence"] * 1000)) for b in dets),
+            sum(b["class_id"] for b in dets),
+        )
 
-    # repartition(1) + sortWithinPartitions, NOT orderBy: a global sort
-    # plans a range-sampling job that would re-run the decode scan; the
-    # signature output is keyframe-count-sized, so one exchange of tiny
-    # rows is the cheap total order. Streaming plans forbid sorting —
-    # the micro-batch consumer orders at the sink (the S3 twin test
-    # sorts collected rows).
-    out = frames.mapInPandas(run, schema=_SIGNATURE_DDL)
-    if out.isStreaming:
-        return out
-    return out.repartition(1).sortWithinPartitions(
-        "camera_id", "frame_number"
+    return _in_frame_order(
+        _map_keyframes(frames, cfg, _SIGNATURE_DDL, per_row, image_col)
     )
 
 
@@ -510,67 +459,33 @@ def roundtrip_contract(
     expected |U-V| of independent uniforms), which is where any demux
     offset, quant-table, or IDCT regression lands. 60.0 sits ~34%
     above correct and ~30% below broken."""
-    conf, classes = cfg.confidence, cfg.classes
-    target = cfg.target_resolution
-    class_ids = {i for i, n in StubDetector.CLASSES.items() if n in classes}
+    conf, target = cfg.confidence, cfg.target_resolution
+    class_ids = {i for i, n in StubDetector.CLASSES.items() if n in cfg.classes}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        detector = StubDetector(conf, classes)
-        rz = _best_resize()
-        for pdf in batches:
-            rows = []
-            for cam, fno, buf in zip(
-                pdf["camera_id"], pdf["frame_number"], pdf[image_col]
-            ):
-                img = decode_image(bytes(buf))
-                ref = md5_image_array(f"{cam}:{int(fno)}", *img.shape[:2])
-                mae = float(
-                    np.abs(img.astype(np.int64) - ref.astype(np.int64)).mean()
-                )
-                boxed = letterbox_array(img, target, resize=rz)
-                h, w = img.shape[:2]
-                scale = min(target / w, target / h)
-                new_w = max(1, int(w * scale))
-                new_h = max(1, int(h * scale))
-                pad_top = (target - new_h) // 2
-                pad_left = (target - new_w) // 2
-                content = boxed[
-                    pad_top : pad_top + new_h, pad_left : pad_left + new_w
-                ]
-                pad_sum = int(boxed.astype(np.int64).sum()) - int(
-                    content.astype(np.int64).sum()
-                )
-                dets = detector.detect(boxed)
-                dets_ok = len(dets) <= 3 and all(
-                    0 <= b["x_min"] < b["x_max"] <= target
-                    and 0 <= b["y_min"] < b["y_max"] <= target
-                    and conf <= b["confidence"] < 1.0
-                    and b["class_id"] in class_ids
-                    for b in dets
-                )
-                rows.append(
-                    (
-                        cam,
-                        int(fno),
-                        boxed.shape == (target, target, 3),
-                        mae <= mae_bound,
-                        pad_sum == 0,
-                        dets_ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "camera_id", "frame_number", "shape_ok",
-                    "mae_ok", "pad_ok", "dets_ok",
-                ],
-            )
+    def per_row(row, img, boxed, dets):
+        cam, fno = row["camera_id"], int(row["frame_number"])
+        ref = md5_image_array(f"{cam}:{fno}", *img.shape[:2])
+        mae = float(np.abs(img.astype(np.int64) - ref.astype(np.int64)).mean())
+        _, _, _, rows, cols = _letterbox_slot(*img.shape[:2], target)
+        pad_sum = int(boxed.astype(np.int64).sum()) - int(
+            boxed[rows, cols].astype(np.int64).sum()
+        )
+        dets_ok = len(dets) <= 3 and all(
+            0 <= b["x_min"] < b["x_max"] <= target
+            and 0 <= b["y_min"] < b["y_max"] <= target
+            and conf <= b["confidence"] < 1.0
+            and b["class_id"] in class_ids
+            for b in dets
+        )
+        return (
+            cam,
+            fno,
+            boxed.shape == (target, target, 3),
+            mae <= mae_bound,
+            pad_sum == 0,
+            dets_ok,
+        )
 
-    # same keyframe-count-sized output + streaming-plan argument as
-    # content_signature
-    out = frames.mapInPandas(run, schema=_CONTRACT_DDL)
-    if out.isStreaming:
-        return out
-    return out.repartition(1).sortWithinPartitions(
-        "camera_id", "frame_number"
+    return _in_frame_order(
+        _map_keyframes(frames, cfg, _CONTRACT_DDL, per_row, image_col)
     )

@@ -2250,21 +2250,8 @@ _register(
 )(_pixel_pipeline)
 
 
-# (n_cams, n_frames, w, h, q) — shared by the fixture builder and the
-# keyframe pushdown IN-list below, so the two can never disagree (the
-# r17 shape hardcoded isin([0, 30]), correct only while n_frames stayed
-# 60; tests/test_r18_optimizations.py pins the tie)
+# (n_cams, n_frames, w, h, q) of the detections-lane MJPEG fixture
 _MJPEG_FIXTURE_GEOMETRY = (2, 60, 640, 360, 85)
-
-
-def _mjpeg_keyframe_numbers() -> list[int]:
-    """The keyframe numbers the production modulo filter selects from the
-    fixture — derived from the SAME constants the fixture builder uses
-    plus the pipeline's configured interval."""
-    from uav_streamprocessor_spark.config import DEFAULT_CONFIG
-
-    n_frames = _MJPEG_FIXTURE_GEOMETRY[1]
-    return list(range(0, n_frames, DEFAULT_CONFIG.keyframe_interval))
 
 
 def _mjpeg_fixture_paths(spark) -> list[str]:
@@ -2361,38 +2348,10 @@ def _pixel_pipeline_mjpeg(spark):
     the S2 shape UAV cameras actually emit (cv2.VideoCapture in
     uav/frame_reader.py:63); the synthetic twin measures the detect
     stages, this one adds the true decode cost."""
-    from pyspark.sql import functions as F
-
     from uav_streamprocessor_spark.plans.pipeline import keyframe_detections_flat
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.video_source import keyframe_scan
 
-    video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    paths = _mjpeg_fixture_paths(spark)
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", ",".join(paths))
-        .option("pushdown", "true")
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # r17 (guide §6, pushdown to the scan — the r16 moments-twin
-        # precedent applied to the detections lane): the keyframe
-        # decimation this plan applies anyway rides into the source as
-        # an IN list, so only the keyframes of each camera are
-        # entropy-decoded — the sparse seek plan skips 58/60 of the
-        # T.81 work; the production keyframes() modulo filter stays on
-        # top, semantics unchanged. r18: the list derives from the
-        # fixture geometry + configured interval instead of a literal
-        # [0, 30] (ADVICE r17 — a longer fixture would have silently
-        # dropped keyframes >= 60)
-        .filter(F.col("frame_number").isin(_mjpeg_keyframe_numbers()))
-    )
+    frames = keyframe_scan(spark, _mjpeg_fixture_paths(spark))
     return keyframe_detections_flat(frames)
 
 
@@ -2417,39 +2376,12 @@ def _pixel_moments(spark):
     (operators/pixel.content_signature) so every byte of the letterboxed
     payload AND every stub-detector output (frame_processing.py:60-115
     contract) replays bit-for-bit in DuckDB."""
-    from pyspark.sql import functions as F
-
     from uav_streamprocessor_spark.operators.pixel import content_signature
     from uav_streamprocessor_spark.operators.uav_core import keyframes
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.video_source import keyframe_scan
 
-    video_source.register(spark)
-    # runtime conf, vanilla-session safe (the register_base_tables
-    # nanosAsLong precedent): Spark refuses a pushFilters reader while
-    # this is false, and the driver contract runs an untuned session
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spec = ",".join(
-        f"synthetic://px{i}?frames=121&w=640&h=360&gen=md5" for i in range(2)
-    )
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", spec)
-        .option("pushdown", "true")
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # bounded-decimation IN hint: consumed by the source's
-        # frame_number pushdown, so skipped frames are never synthesized
-        # (the keyframe analogue of row-group pruning); the production
-        # keyframes() modulo filter stays on top, semantics unchanged
-        .filter(F.col("frame_number").isin([0, 30, 60, 90, 120]))
-    )
-    return content_signature(keyframes(frames))
+    spec = [f"synthetic://px{i}?frames=121&w=640&h=360&gen=md5" for i in range(2)]
+    return content_signature(keyframes(keyframe_scan(spark, spec)))
 
 
 _register(
@@ -2621,31 +2553,11 @@ def _pixel_moments_mjpeg(spark):
     shape preserved, decode error vs the md5-regenerated original under
     the calibrated bound, letterbox padding exactly zero, detections
     inside the stub contract (operators/pixel.roundtrip_contract)."""
-    from pyspark.sql import functions as F
-
     from uav_streamprocessor_spark.operators.pixel import roundtrip_contract
     from uav_streamprocessor_spark.operators.uav_core import keyframes
-    from uav_streamprocessor_spark.sources import video_source
+    from uav_streamprocessor_spark.sources.video_source import keyframe_scan
 
-    video_source.register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    paths = _mjpeg_md5_fixture_paths(spark)
-    frames = (
-        spark.read.format("uav_video")
-        .option("path", ",".join(paths))
-        .option("pushdown", "true")
-        # r18: one keyframe per partition — under IN-list pushdown the
-        # sparse plan packs requested frames into framesPerPartition
-        # chunks, so "4" serialized a camera's keyframe decodes in one
-        # task (detections-lane A/B median-of-5: 1.66 -> 1.25 s, rows
-        # identical; ADJUDICATION_r18). The read is keyframe-sparse by
-        # construction, so task count scales with keyframes, not frames.
-        .option("framesPerPartition", "1")
-        .load()
-        # decimation pushdown: only the keyframes are entropy-decoded —
-        # the sparse seek plan skips 29/31 of the T.81 work per camera
-        .filter(F.col("frame_number").isin([0, 30]))
-    )
+    frames = keyframe_scan(spark, _mjpeg_md5_fixture_paths(spark))
     return roundtrip_contract(keyframes(frames))
 
 

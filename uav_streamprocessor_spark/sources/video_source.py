@@ -27,6 +27,8 @@ from __future__ import annotations
 import json
 from collections.abc import Iterator
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -36,6 +38,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 FRAME_DDL = (
     "camera_id string, frame_number bigint, width int, height int, "
@@ -313,6 +317,39 @@ class PushdownVideoBatchReader(VideoBatchReader):
         self._frame_filter = (
             frames if self._frame_filter is None else self._frame_filter & frames
         )
+
+
+def keyframe_scan(
+    spark, paths: list[str], cfg: PipelineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Keyframe-sparse batch read of `uav_video` sources — the scan the
+    pixel queries put under their keyframe filter. The keyframe numbers
+    derive from each source's own frame count and
+    `cfg.keyframe_interval`, and ride into PushdownVideoBatchReader as a
+    frame_number IN list, so only keyframes are ever decoded (the
+    keyframe analogue of row-group pruning). One keyframe per partition:
+    the sparse plan packs requested frames into framesPerPartition
+    chunks, so a larger value would serialize a camera's keyframe
+    decodes in one task. The caller's keyframes() modulo filter stays on
+    top, semantics unchanged.
+
+    Sets spark.sql.python.filterPushdown.enabled at runtime: Spark
+    refuses a pushFilters reader while it is false, and the engine must
+    also run from vanilla sessions (the driver contract)."""
+    wanted = sorted({
+        f for p in paths
+        for f in range(0, _open_decoder(p).n_frames, cfg.keyframe_interval)
+    })
+    register(spark)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    return (
+        spark.read.format("uav_video")
+        .option("path", ",".join(paths))
+        .option("pushdown", "true")
+        .option("framesPerPartition", "1")
+        .load()
+        .filter(F.col("frame_number").isin(wanted))
+    )
 
 
 class VideoStreamReader(DataSourceStreamReader):

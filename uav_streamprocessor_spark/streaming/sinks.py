@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
 from typing import Callable
 
@@ -36,6 +37,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
+from uav_streamprocessor_spark.sources.avi import (
+    FOURCC_DIB,
+    FOURCC_MJPG,
+    AviFile,
+    AviStreamWriter,
+)
 
 
 def _default_post(url: str, image: bytes, metadata: str, timeout: float) -> int:
@@ -216,73 +223,48 @@ class _AviCameraWriter:
     the demuxer gave S2/S3 real container bytes; this gives K1 the same).
 
     Frames decode from the engine raw-tensor buffer (pixel.decode_image)
-    and mux as uncompressed BI_RGB (DIB) chunks via sources/avi
-    .AviStreamWriter — pure container arithmetic, no cv2, no codec; the
-    output is a spec-correct AVI any player or the engine's own
-    `uav_video` DataSource reads back pixel-exactly. Same segment
-    protocol as the other writers: `{cam}.b{batch:06d}.avi`, truncate on
-    open, replayed batches overwrite their own segment. Frames stream
-    through one at a time (AviStreamWriter patches the header on close),
-    so memory stays one-frame-bounded like the cv2 path."""
+    and mux into one AVI segment via sources/avi.AviStreamWriter — pure
+    container arithmetic, no cv2; the output is a spec-correct AVI any
+    player or the engine's own `uav_video` DataSource reads back. The
+    fourcc picks the lane:
 
-    def __init__(self, out: Path, cam: str, batch_id: int, w: int, h: int,
-                 fps: float):
-        _check_camera_id(cam)
-        from uav_streamprocessor_spark.operators.pixel import decode_image
-        from uav_streamprocessor_spark.sources.avi import AviStreamWriter
+    - DIB (fmt="avi"): uncompressed BI_RGB chunks, pixel-exact.
+    - MJPG (fmt="mjpeg"): each frame encodes to a real baseline JPEG
+      (operators/jpeg.py, q=90 4:2:0) — the engine's analogue of the
+      reference's compressed MP4 output (frame_processing.py:142-159),
+      typically ~10-25× smaller than DIB, decoded back through
+      operators/jpeg.decode_jpeg. reassemble_segments' chunk-level remux
+      is fourcc-agnostic and stays LOSSLESS (the JPEG bytes pass through
+      verbatim; the only loss is the original encode, exactly like the
+      cv2 mp4 writer's).
 
-        self._decode = decode_image
-        self._wr = AviStreamWriter(
-            out / f"{cam}.b{batch_id:06d}.avi", w, h, fps=fps or 25.0
-        )
-
-    def write(self, row) -> None:
-        self._wr.write_frame(self._decode(row["image"]))
-
-    def close(self) -> None:
-        self._wr.close()
-
-
-class _MjpegAviCameraWriter:
-    """COMPRESSED codec-free video recorder — the engine's analogue of
-    the reference's compressed MP4 output (frame_processing.py:142-159),
-    with zero native dependencies: each frame encodes to a real baseline
-    JPEG (operators/jpeg.py, q=90 4:2:0) and muxes as an MJPG chunk into
-    the same AVI segment protocol as fmt="avi". Typically ~10-25× smaller
-    than the uncompressed DIB lane; playable by any player; decodes back
-    to pixels through the engine's own uav_video DataSource (the MJPG
-    lane re-enters operators/jpeg.decode_jpeg). Segments share the
-    `.avi` extension — reassemble_segments' chunk-level remux is
-    fourcc-agnostic and stays LOSSLESS (the JPEG bytes pass through
-    verbatim; the only loss is the original encode, exactly like the
-    cv2 mp4 writer's)."""
+    Same segment protocol as the other writers: `{cam}.b{batch:06d}.avi`,
+    truncate on open, replayed batches overwrite their own segment.
+    Frames stream through one at a time (AviStreamWriter patches the
+    header on close), so memory stays one-frame-bounded like the cv2
+    path."""
 
     quality = 90
 
     def __init__(self, out: Path, cam: str, batch_id: int, w: int, h: int,
-                 fps: float):
+                 fps: float, fourcc: str = FOURCC_DIB):
         _check_camera_id(cam)
         from uav_streamprocessor_spark.operators.pixel import decode_image
-        from uav_streamprocessor_spark.sources.avi import (
-            FOURCC_MJPG,
-            AviStreamWriter,
-        )
 
         self._decode = decode_image
+        self._jpeg = fourcc == FOURCC_MJPG
         self._wr = AviStreamWriter(
             out / f"{cam}.b{batch_id:06d}.avi", w, h, fps=fps or 25.0,
-            fourcc=FOURCC_MJPG,
+            fourcc=fourcc,
         )
 
     def write(self, row) -> None:
-        from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
+        frame = self._decode(row["image"])
+        if self._jpeg:
+            from uav_streamprocessor_spark.operators.jpeg import encode_jpeg
 
-        self._wr.write_frame(
-            encode_jpeg(
-                self._decode(row["image"]), quality=self.quality,
-                subsampling="4:2:0",
-            )
-        )
+            frame = encode_jpeg(frame, quality=self.quality, subsampling="4:2:0")
+        self._wr.write_frame(frame)
 
     def close(self) -> None:
         self._wr.close()
@@ -292,8 +274,12 @@ _CAMERA_WRITERS = {
     "jsonl": _JsonlCameraWriter,
     "mp4": _Mp4CameraWriter,
     "avi": _AviCameraWriter,
-    "mjpeg": _MjpegAviCameraWriter,
+    "mjpeg": partial(_AviCameraWriter, fourcc=FOURCC_MJPG),
 }
+
+# recorder formats whose writers need the frame pixels: the image bytes
+# ride through the camera repartition only for these
+VIDEO_FORMATS = frozenset(_CAMERA_WRITERS) - {"jsonl"}
 
 # recorder fmt → on-disk segment extension ("mjpeg" shares the .avi
 # container with the DIB lane; only the fourcc differs)
@@ -382,8 +368,6 @@ def _remux_avi(segments: list, dest: Path) -> dict:
     the demuxer's seek index and appended verbatim to one AviStreamWriter
     under segment 0's latched fourcc/size/fps (all segments of one
     camera share the writer's latched config, same invariant as mp4)."""
-    from uav_streamprocessor_spark.sources.avi import AviFile, AviStreamWriter
-
     first = AviFile(str(segments[0]))
     wr = AviStreamWriter(
         str(dest), first.width, first.height,
@@ -553,7 +537,7 @@ class OrderedRecorderSink:
         out_dir, fallback_fps, fmt = self.out_dir, self.cfg.fallback_fps, self.fmt
         acc = self._skipped_acc
         cols = ["camera_id", "frame_number", "width", "height", "fps"]
-        if fmt in ("mp4", "avi", "mjpeg"):
+        if fmt in VIDEO_FORMATS:
             cols.append("image")
         (
             batch.select(*cols)
@@ -595,16 +579,3 @@ class IdempotentBatchSink:
         self.inner(batch, batch_id)
         marker.touch()
 
-
-def parquet_sink(df: DataFrame, path: str, checkpoint: str, partition_by: list[str] | None = None):
-    """The canonical at-scale sink: checkpointed parquet append,
-    partitioned (e.g. by camera_id/date) so downstream scans prune."""
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    return w

@@ -7,7 +7,7 @@ readStream DAG with two sinks driven by the micro-batch engine:
 
   uav_video stream source
     ├── record branch  → OrderedRecorderSink (K1)
-    └── filter(% N)    → letterbox UDF → detect (mapInPandas) → payloads
+    └── filter(% N)    → fused letterbox+detect (mapInPandas) → payloads
                        → HttpSenderSink (K2)
 
 Both sinks are checkpointed foreachBatch (at-least-once; the reference is
@@ -20,7 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from uav_streamprocessor_spark.config import DEFAULT_CONFIG, PipelineConfig
 from uav_streamprocessor_spark.plans.pipeline import recorder_rows, sender_payloads
-from uav_streamprocessor_spark.streaming.sinks import HttpSenderSink, OrderedRecorderSink
+from uav_streamprocessor_spark.streaming.sinks import (
+    VIDEO_FORMATS,
+    HttpSenderSink,
+    OrderedRecorderSink,
+    reassemble_segments,
+)
 
 
 def stream_frames(spark: SparkSession, source_spec: str, frames_per_batch: int = 30) -> DataFrame:
@@ -40,8 +45,8 @@ def run_streaming_pipeline(
     source_spec: str,
     out_dir: str,
     checkpoint_dir: str,
+    sender: HttpSenderSink,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    sender: HttpSenderSink | None = None,
     frames_per_batch: int = 30,
     timeout_s: float = 120.0,
     record_fmt: str = "jsonl",
@@ -66,22 +71,17 @@ def run_streaming_pipeline(
     )
     send_q = (
         sender_payloads(frames, cfg)
-        .writeStream.foreachBatch(sender or HttpSenderSink("http://localhost:9"))
+        .writeStream.foreachBatch(sender)
         .option("checkpointLocation", f"{checkpoint_dir}/send")
         .trigger(availableNow=True)
         .start()
     )
     rec_q.awaitTermination(timeout_s)
     send_q.awaitTermination(timeout_s)
-    from uav_streamprocessor_spark.streaming.sinks import reassemble_segments
-
-    reassembled = reassemble_segments(out_dir, fmt=record_fmt)
-    snd = sender
     return {
-        "recorded_batches": True,
-        "segments": reassembled,
-        "sent": getattr(snd, "sent", None),
-        "send_errors": getattr(snd, "errors", None),
+        "segments": reassemble_segments(out_dir, fmt=record_fmt),
+        "sent": sender.sent,
+        "send_errors": sender.errors,
         "skipped_frames": recorder.skipped,
     }
 
@@ -96,11 +96,9 @@ def recorder_rows_stream(
     lives in the sink's per-camera `_latch/{cam}.json` files — mirroring
     the reference's lazy writer init, frame_processing.py:147-159), so the
     stream side just projects. The image bytes ride along ONLY for the
-    video formats (avi/mp4) — the jsonl metadata recorder must not drag
-    pixel payloads through its shuffle."""
-    from pyspark.sql import functions as F
-
-    cols = ["camera_id", "frame_number", "width", "height", F.col("fps")]
-    if fmt in ("mp4", "avi", "mjpeg"):
+    video formats (sinks.VIDEO_FORMATS) — the jsonl metadata recorder
+    must not drag pixel payloads through its shuffle."""
+    cols = ["camera_id", "frame_number", "width", "height", "fps"]
+    if fmt in VIDEO_FORMATS:
         cols.append("image")
     return frames.select(*cols)
